@@ -100,7 +100,9 @@ def run_interval_range(
     holds back its loads, everything else lands, and the interval is
     recorded committed (the reference's none_failed_min_one_success end
     rule). A batch that raises outright leaves no progress row and no
-    gold change — the rerun picks up exactly there.
+    gold change — the rerun picks up exactly there. Every batch attempt's
+    cached bronze frames are released once the interval's publish
+    resolves, however it resolves.
     """
     ran: list[tuple[_dt.datetime, BatchResult, int]] = []
     done = completed_intervals(store)
@@ -108,7 +110,7 @@ def run_interval_range(
         iso = interval_end.isoformat()
         if iso in done:
             continue
-        holder: dict[str, BatchResult] = {}
+        attempts: list[BatchResult] = []
 
         def build(tables, _iso=iso, _ie=interval_end):
             # re-check on EVERY build attempt: publish_with_retry rebuilds
@@ -135,7 +137,7 @@ def run_interval_range(
                 existing=existing or None,
                 **run_batch_kwargs,
             )
-            holder["res"] = res
+            attempts.append(res)
             row = spark.createDataFrame(
                 [(_iso, sorted(res.gold), sorted(res.failed))],
                 "interval_end string, loaded array<string>, "
@@ -151,7 +153,10 @@ def run_interval_range(
             version = publish_with_retry(store, build)
         except _IntervalAlreadyCommitted:
             continue  # a racing driver committed it — skip, don't re-run
-        ran.append((interval_end, holder["res"], version))
+        finally:
+            for res in attempts:
+                res.release()
+        ran.append((interval_end, attempts[-1], version))
     return ran
 
 

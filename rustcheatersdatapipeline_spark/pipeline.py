@@ -29,7 +29,7 @@ from pyspark.sql.utils import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .operators.dedup import ValidationError, assert_no_duplicates, assert_no_nulls
+from .operators.dedup import assert_no_duplicates, assert_no_nulls
 from .schemas import BRONZE_SCHEMAS
 from .transforms.builders import DIM_TRANSFORMS, FACT_TRANSFORMS
 from .warehouse.loads import build_warehouse
@@ -75,6 +75,15 @@ class BatchResult:
     #: branches that failed once and succeeded on the bounded re-attempt
     #: (reference retries: 1, rust_twitter_steam_pipeline.py:40-41)
     retried: list[str] = field(default_factory=list)
+    #: the bronze frames ``read_bronze`` cached; ``gold``'s lazy plans
+    #: read them until ``release`` drops them (once gold is persisted)
+    cached: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Unpersist this batch's cached bronze frames."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached = []
 
     @property
     def succeeded(self) -> bool:
@@ -84,9 +93,10 @@ class BatchResult:
 
 
 def read_bronze(
-    spark: SparkSession, bronze_dir: str
+    spark: SparkSession, bronze_dir: str, cached: list[DataFrame] | None = None
 ) -> tuple[dict[str, DataFrame], dict[str, str]]:
-    """Schema-pinned bronze reads.
+    """Schema-pinned bronze reads. Every frame this call caches is
+    appended to ``cached``, when given, for the caller to unpersist.
 
     - Missing endpoint file → skipped branch (S15 soft-fail semantics).
     - Malformed JSON → FAILED branch, detected via permissive-mode
@@ -111,6 +121,8 @@ def read_bronze(
                 .json(f"{bronze_dir}/{name}.json")
                 .cache()  # required to filter on the corrupt column alone
             )
+            if cached is not None:
+                cached.append(df)
             n_corrupt = df.filter(F.col("_corrupt_record").isNotNull()).count()
             if n_corrupt:
                 failed[name] = f"{n_corrupt} corrupt bronze record(s)"
@@ -144,8 +156,8 @@ def run_batch(
     build_warehouse carries prior state for those and loads the rest.
     """
     date_end = date_end or (interval_end.date() + _dt.timedelta(days=365))
-    bronze, bad_bronze = read_bronze(spark, bronze_dir)
     result = BatchResult(gold={})
+    bronze, bad_bronze = read_bronze(spark, bronze_dir, result.cached)
 
     silver: dict[str, DataFrame] = {}
     for name, (fn, src) in {**DIM_TRANSFORMS, **FACT_TRANSFORMS}.items():
@@ -165,43 +177,18 @@ def run_batch(
                 if attempt == 2:
                     result.retried.append(name)
                 break
-            except (ValidationError, Exception) as e:  # per-branch isolation (§3.1)
+            except Exception as e:  # per-branch isolation (§3.1)
                 result.failed[name] = str(e)
 
     if silver:
-        result.gold = build_warehouse(
-            spark, silver, date_start, date_end, existing=existing
-        )
+        try:
+            result.gold = build_warehouse(
+                spark, silver, date_start, date_end, existing=existing
+            )
+        except BaseException:
+            result.release()
+            raise
         expected = set(DIM_TRANSFORMS) | set(FACT_TRANSFORMS) | {"date_dim"}
         result.not_loaded = sorted(expected - set(result.gold))
     return result
 
-
-def run_batch_transactional(
-    spark: SparkSession,
-    bronze_dir: str,
-    interval_end: _dt.datetime,
-    store,
-    **kwargs,
-) -> tuple[BatchResult, int]:
-    """``run_batch`` with the reference's ON CONFLICT durability: prior
-    gold state is read from the ``GoldStore``'s current manifest, the
-    batch's gold publishes under compare-and-swap, and a lost race
-    (another interval or a backfill published first) REBUILDS this
-    batch on the winner's state instead of clobbering it — the upserts
-    inside ``build_warehouse`` are key-idempotent, so any interleaving
-    converges to the serial result. Returns (batch result, committed
-    store version)."""
-    from .warehouse.persist import publish_with_retry
-
-    holder: dict[str, BatchResult] = {}
-
-    def build(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        res = run_batch(
-            spark, bronze_dir, interval_end, existing=tables or None, **kwargs
-        )
-        holder["res"] = res
-        return res.gold
-
-    version = publish_with_retry(store, build)
-    return holder["res"], version

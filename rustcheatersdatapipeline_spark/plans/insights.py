@@ -115,7 +115,7 @@ def bans_per_country_in_range(
     gold: dict[str, DataFrame], date_sk_lo: int, date_sk_hi: int
 ) -> DataFrame:
     """A1 restricted to a date_sk range — the incremental/dashboard
-    shape. Over gold persisted by ``persist.write_gold`` (facts
+    shape. Over gold persisted by ``persist.GoldStore`` (facts
     partitioned by date_sk) the range lands in PartitionFilters and the
     scan reads only the touched dates; pinned by
     tests/test_skew_and_bucketing.py."""

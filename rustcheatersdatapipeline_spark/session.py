@@ -23,6 +23,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 24g: a fixed 24g heap lets the
+    JVM outgrow a smaller host and get OOM-killed."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "24g"
+    return f"{max(1, min(24, phys // 2 >> 30))}g"
+
+
 def get_spark(
     app_name: str = "rustcheaters-spark-engine",
     cpus: str | int | None = None,
@@ -34,6 +44,8 @@ def get_spark(
     cores. ``shuffle_partitions`` defaults to the core count — at local
     test scale a 200-partition shuffle is pure overhead; on a real cluster
     AQE coalescing makes the static value a ceiling, not a target.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM`` when set, else
+    ``_default_driver_memory()``.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -52,7 +64,10 @@ def get_spark(
         # ratio IS the scan time — fewer bytes per row group beats
         # snappy's marginally faster decompress on every cold read.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Compile-time auto-broadcast OFF, runtime (AQE) auto-broadcast ON.
         # Catalyst's static size estimates are unreliable downstream of

@@ -73,35 +73,21 @@ def export_file_list(store, name: str, version: int | None = None) -> dict:
         store.current_manifest() if version is None else store.manifest_at(version)
     )
     entry = manifest["tables"][name]
-    if any(f.get("dv") for f in entry.get("files") or []):
+    files = store._files(name, entry)
+    if any(f.get("dv") for f in files):
         raise ValueError(
             f"{name}: snapshot has outstanding deletion vectors — raw files "
             "contain dead rows; materialize via export_snapshot (or run "
             "optimize) instead"
         )
-    files = store._complete_files(entry)
-    if files is not None:
-        paths = [os.path.join(store.path, f["path"]) for f in files]
-    else:
-        import glob as _glob
-
-        paths = [
-            fp
-            for d in store._dirs(entry)
-            for fp in sorted(
-                _glob.glob(
-                    os.path.join(store.path, d, "**", "*.parquet"), recursive=True
-                )
-            )
-        ]
     return {
         "format": EXPORT_FORMAT,
         "zero_copy": True,
         "table": name,
         "source_version": int(manifest["version"]),
-        "rows": int(entry.get("rows", -1)),
-        "schema": entry.get("schema"),
-        "files": paths,
+        "rows": int(entry["rows"]),
+        "schema": entry["schema"],
+        "files": [os.path.join(store.path, f["path"]) for f in files],
     }
 
 
@@ -129,7 +115,7 @@ def export_snapshot(
     os.makedirs(dest, exist_ok=True)
     out_tables: dict[str, dict] = {}
     for n in names:
-        df = store._read_entry(manifest["tables"][n])
+        df = store._read_entry(n, manifest["tables"][n])
         target = os.path.join(dest, n)
         df.write.mode("error").parquet(target)
         back = store.spark.read.parquet(target)

@@ -9,9 +9,8 @@ Storage layout designed for the 100 TB read patterns:
 - everything is Parquet: columnar pruning + predicate pushdown, unlike
   the reference's CSV text round-trips (§4.4).
 
-``overwrite`` mode keeps batch writes idempotent at the file level: a
-re-run of the same batch rewrites the same content (the upsert writers
-already guarantee value-level idempotency).
+``GoldStore`` is the transactional store every batch publishes through;
+``write_gold_tables`` is the catalog-table export for bucketed joins.
 """
 
 from __future__ import annotations
@@ -43,14 +42,6 @@ GOLD_BUCKET_KEY = "player_sk"
 GOLD_BUCKETS = 8
 
 
-def write_gold(gold: dict[str, DataFrame], path: str) -> None:
-    for name, df in gold.items():
-        w = df.write.mode("overwrite")
-        if name in PARTITIONED_FACTS and "date_sk" in df.columns:
-            w = w.partitionBy("date_sk")
-        w.parquet(os.path.join(path, name))
-
-
 def write_gold_tables(
     spark: SparkSession,
     gold: dict[str, DataFrame],
@@ -58,8 +49,9 @@ def write_gold_tables(
     path: str,
     buckets: int = GOLD_BUCKETS,
 ) -> None:
-    """Catalog-table variant of ``write_gold``: same date_sk partition
-    layout, plus facts bucketed (and sort-ordered) on ``player_sk`` so
+    """Catalog-table layout of a gold build: facts partitioned by
+    date_sk (as ``GoldStore`` stages them), plus facts bucketed (and
+    sort-ordered) on ``player_sk`` so
     repeated fact⋈fact / fact⋈player joins scan co-located buckets with
     NO exchange on either side (pinned by
     tests/test_skew_and_bucketing.py). Bucketing requires the table
@@ -74,13 +66,6 @@ def write_gold_tables(
         if name.endswith("_fact") and GOLD_BUCKET_KEY in df.columns:
             w = w.bucketBy(buckets, GOLD_BUCKET_KEY).sortBy(GOLD_BUCKET_KEY)
         w.saveAsTable(f"{database}.{name}")
-
-
-def read_gold(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    out: dict[str, DataFrame] = {}
-    for name in os.listdir(path):
-        out[name] = spark.read.parquet(os.path.join(path, name))
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -134,16 +119,20 @@ class TablePropertiesError(RuntimeError):
 class GoldStore:
     """Write-audit-publish gold storage with optimistic concurrency.
 
-    Plain ``write_gold``'s whole-table ``overwrite`` is last-writer-wins:
-    two concurrent batches silently drop one batch's rows. The store
-    fixes that with the standard table-format commit protocol (the shape
-    Iceberg/Delta use — public designs):
+    A whole-table ``overwrite`` is last-writer-wins: two concurrent
+    batches silently drop one batch's rows. The store fixes that with
+    the standard table-format commit protocol (the shape Iceberg/Delta
+    use — public designs):
 
     - **write**: each publish lands its tables in an immutable
       ``_data/<txn>/`` directory; nothing references it yet, so a crashed
       or rejected publish leaves gold untouched (orphans are vacuumed).
-    - **audit**: staged tables are read back (schema + row count) before
-      they can be referenced — a torn write can never become visible.
+    - **audit**: every staged parquet footer is opened before the table
+      can be referenced — a torn file fails the footer read, so it can
+      never become visible. The footers also give the entry its row
+      count and per-file stats without a Spark job; the written frame's
+      schema (as Spark reads it back) is recorded beside them. Only
+      tables with expectations or declared constraints are scanned.
     - **publish**: a root ``_manifest.json`` names the exact directory of
       every table version. Commit = fsync a new manifest + atomic
       ``os.replace``, performed under a compare-and-swap on the base
@@ -209,48 +198,41 @@ class GoldStore:
 
     def read_all(self) -> dict[str, DataFrame]:
         m = self.current_manifest()
-        return {name: self._read_entry(entry) for name, entry in m["tables"].items()}
+        return {name: self._read_entry(name, entry) for name, entry in m["tables"].items()}
 
-    def _read_entry(self, entry: dict) -> DataFrame:
-        """Open a table entry. Multi-dir (append-published) entries read
-        with the MANIFEST-recorded union schema, so an older dir that
-        predates an additive column yields NULLs for it — schema
-        evolution without ``mergeSchema``'s read-every-footer cost (the
-        schema was merged once, at commit time). The recorded schema
-        applies to SINGLE-dir entries too: a one-txn ``changes_since``
-        delta must expose the same column set as ``read()`` after
-        additive evolution, not its footer's pre-evolution subset.
-        Legacy entries without a recorded schema fall back to
-        ``mergeSchema`` (footer merge).
+    @staticmethod
+    def _files(name: str, entry: dict) -> list[dict]:
+        """The entry's per-file records. Every writer records ``files``
+        and ``schema``; an entry without either is not read some other
+        way — it raises ``ValueError`` naming the table."""
+        missing = [k for k in ("files", "schema") if entry.get(k) is None]
+        if missing:
+            raise ValueError(
+                f"table {name!r}: manifest entry has no {' or '.join(missing)}"
+            )
+        return entry["files"]
+
+    def _read_entry(self, name: str, entry: dict) -> DataFrame:
+        """Open a table entry with its MANIFEST-recorded schema, so an
+        older dir that predates an additive column yields NULLs for it —
+        schema evolution without ``mergeSchema``'s read-every-footer cost
+        (the schema was merged once, at commit time). The recorded
+        schema applies to SINGLE-dir entries too: a one-txn
+        ``changes_since`` delta must expose the same column set as
+        ``read()`` after additive evolution, not its footer's
+        pre-evolution subset.
 
         ``file_level`` entries (produced by ``merge``) reference an
         explicit FILE set rather than whole dirs — a copy-on-write merge
         rewrote some files of a dir and carried the rest forward by
         reference, so the dir alone no longer describes the table."""
+        from pyspark.sql.types import StructType
+
+        files = self._files(name, entry)
         if entry.get("file_level"):
-            df = self._read_files(entry["files"])
-            if entry.get("schema") is not None:
-                from pyspark.sql import functions as F
-                from pyspark.sql.types import StructType
-
-                want = StructType.fromJson(entry["schema"])
-                cols = [
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in df.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in want.fields
-                ]
-                df = df.select(*cols)
-            return df
+            return self._apply_entry_schema(self._read_files(files), entry["schema"])
         dirs = [os.path.join(self.path, d) for d in self._dirs(entry)]
-        r = self.spark.read
-        if entry.get("schema") is not None:
-            from pyspark.sql.types import StructType
-
-            r = r.schema(StructType.fromJson(entry["schema"]))
-        elif len(dirs) > 1:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(*dirs)
+        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*dirs)
 
     #: helper columns for deletion-vector bookkeeping: the row's file as
     #: a manifest-relative path, and its ordinal within that file
@@ -345,7 +327,7 @@ class GoldStore:
         return base
 
     def read(self, name: str) -> DataFrame:
-        return self._read_entry(self.current_manifest()["tables"][name])
+        return self._read_entry(name, self.current_manifest()["tables"][name])
 
     # -- time travel -------------------------------------------------------
 
@@ -370,7 +352,7 @@ class GoldStore:
         Valid until ``vacuum`` reclaims dirs the CURRENT manifest no
         longer references; after that a stale snapshot read fails fast
         on the missing path rather than returning partial data."""
-        return self._read_entry(self.manifest_at(version)["tables"][name])
+        return self._read_entry(name, self.manifest_at(version)["tables"][name])
 
     def changes_since(self, name: str, from_version: int) -> DataFrame:
         """Rows of ``name`` appended AFTER ``from_version`` — exact
@@ -399,10 +381,7 @@ class GoldStore:
         try:
             base_tables = self.manifest_at(from_version)["tables"]
         except FileNotFoundError:
-            raise ValueError(
-                f"{name}: the manifest for v{from_version} was pruned — the "
-                "baseline is unknowable; do a full read instead"
-            ) from None
+            self._raise_pruned(name, from_version)
         base_entry = base_tables.get(name)
         if cur.get("file_level") or (base_entry or {}).get("file_level"):
             # a merge() produced file-level entries: the dir set no
@@ -413,46 +392,33 @@ class GoldStore:
             # consumer does a full read (same contract as an unrecorded
             # compaction).
             base_files = (
-                {f["path"] for f in (base_entry.get("files") or [])}
+                {f["path"]: f for f in self._files(name, base_entry)}
                 if base_entry is not None
-                else set()
+                else {}
             )
-            if base_entry is not None and base_entry.get("files") is None:
-                raise ValueError(
-                    f"{name}: baseline v{from_version} predates file stats — "
-                    "file-level diff is unknowable; do a full read instead"
-                )
-            cur_files = [f["path"] for f in cur["files"]]
-            if not base_files <= set(cur_files):
+            cur_files = {f["path"]: f for f in self._files(name, cur)}
+            if not base_files.keys() <= cur_files.keys():
                 raise ValueError(
                     f"{name}: a merge since v{from_version} rewrote files — "
                     "the delta is not append-only; do a full read instead"
                 )
+
+            def dv_dirs(f: dict) -> list[str]:
+                return [d["dir"] for d in f.get("dv") or []]
+
             # a merge-on-read update leaves every path in place but adds
             # deletion vectors: that too is not append-only
-            base_dv = {
-                f["path"]: [d["dir"] for d in f.get("dv") or []]
-                for f in (base_entry.get("files") or [])
-            } if base_entry is not None else {}
-            cur_dv = {
-                f["path"]: [d["dir"] for d in f.get("dv") or []]
-                for f in cur["files"]
-            }
-            if any(cur_dv.get(p, []) != dv for p, dv in base_dv.items()):
+            if any(dv_dirs(cur_files[p]) != dv_dirs(f) for p, f in base_files.items()):
                 raise ValueError(
                     f"{name}: a merge since v{from_version} added deletion "
                     "vectors — the delta is not append-only; use changes_cdc "
                     "or do a full read instead"
                 )
-            delta_files = [p for p in cur_files if p not in base_files]
+            delta_files = [f for p, f in cur_files.items() if p not in base_files]
             if not delta_files:
-                return self._read_entry(cur).limit(0)
+                return self._read_entry(name, cur).limit(0)
             return self._read_entry(
-                {
-                    "file_level": True,
-                    "files": [{"path": p} for p in delta_files],
-                    "schema": cur.get("schema"),
-                }
+                name, {**cur, "file_level": True, "files": delta_files}
             )
         base_dirs = set(self._dirs(base_entry)) if base_entry is not None else set()
         cur_dirs = self._dirs(cur)
@@ -461,8 +427,24 @@ class GoldStore:
         else:
             delta = self._appended_dirs_via_history(name, from_version)
         if not delta:
-            return self._read_entry(cur).limit(0)
-        return self._read_entry({**cur, "dirs": delta, "dir": None})
+            return self._read_entry(name, cur).limit(0)
+        return self._read_entry(name, {**cur, "dirs": delta, "dir": None})
+
+    def _retained_since(
+        self, name: str, from_version: int, cur_version: int, what: str
+    ) -> list[int]:
+        """The versions after ``from_version`` up to ``cur_version``;
+        raises ``ValueError`` when any of their manifests was pruned
+        (``what`` says what the missing history leaves unprovable)."""
+        expected = list(range(from_version + 1, cur_version + 1))
+        retained = [v for v in self.versions() if v > from_version]
+        if retained != expected:
+            missing = sorted(set(expected) - set(retained))
+            raise ValueError(
+                f"{name}: manifests for versions {missing} since "
+                f"v{from_version} were pruned — {what}; do a full read instead"
+            )
+        return expected
 
     def _appended_dirs_via_history(self, name: str, from_version: int) -> list[str]:
         """The exact dirs appended to ``name`` after ``from_version``,
@@ -472,16 +454,10 @@ class GoldStore:
         (``compacted_from`` == exactly the dirs it replaced); anything
         else — or a pruned manifest — raises ``ValueError``. Metadata-only:
         O(versions) manifest reads, no data scanned."""
-        cur_version = int(self.current_manifest()["version"])
-        expected = list(range(from_version + 1, cur_version + 1))
-        retained = [v for v in self.versions() if v > from_version]
-        if retained != expected:
-            missing = sorted(set(expected) - set(retained))
-            raise ValueError(
-                f"{name}: manifests for versions {missing} since "
-                f"v{from_version} were pruned — history cannot prove the "
-                "diff is append-only; do a full read instead"
-            )
+        expected = self._retained_since(
+            name, from_version, self.current_version(),
+            "history cannot prove the diff is append-only",
+        )
         base_tables = self.manifest_at(from_version)["tables"]
         prev = list(self._dirs(base_tables[name])) if name in base_tables else []
         appended: list[str] = []
@@ -528,9 +504,10 @@ class GoldStore:
             return int(prev_entry["rows"]) == int(entry["rows"])
         return True
 
-    def _apply_entry_schema(self, df: DataFrame, schema_json: dict | None) -> DataFrame:
-        if schema_json is None:
-            return df
+    @staticmethod
+    def _apply_entry_schema(df: DataFrame, schema_json: dict) -> DataFrame:
+        """Project ``df`` onto the recorded schema: columns cast to their
+        recorded types, columns the files predate read as NULL."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
@@ -567,33 +544,21 @@ class GoldStore:
         cur_entry = cur_manifest["tables"].get(name)
         if cur_entry is None:
             raise KeyError(name)
-        cur_version = int(cur_manifest["version"])
-        expected = list(range(from_version + 1, cur_version + 1))
-        retained = [v for v in self.versions() if v > from_version]
-        if retained != expected:
-            missing = sorted(set(expected) - set(retained))
-            raise ValueError(
-                f"{name}: manifests for versions {missing} since "
-                f"v{from_version} were pruned — cdc is unprovable; do a "
-                "full read instead"
-            )
+        expected = self._retained_since(
+            name, from_version, int(cur_manifest["version"]), "cdc is unprovable"
+        )
         try:
             prev = self.manifest_at(from_version)["tables"].get(name)
         except FileNotFoundError:
             prev = None if from_version == 0 else self._raise_pruned(name, from_version)
-        schema = cur_entry.get("schema")
+        self._files(name, cur_entry)
+        schema = cur_entry["schema"]
         frames: list[DataFrame] = []
 
         def rec_map(entry: dict | None) -> dict[str, dict]:
             if entry is None:
                 return {}
-            files = self._complete_files(entry)
-            if files is None:
-                raise ValueError(
-                    f"{name}: an entry in the history lacks complete file "
-                    "records — cdc is unprovable; do a full read instead"
-                )
-            return {f["path"]: f for f in files}
+            return {f["path"]: f for f in self._files(name, entry)}
 
         for v in expected:
             nxt = self.manifest_at(v)["tables"].get(name)
@@ -670,7 +635,7 @@ class GoldStore:
                     )
             prev = nxt
         if not frames:
-            return self._read_entry(cur_entry).limit(0).withColumn(
+            return self._read_entry(name, cur_entry).limit(0).withColumn(
                 "_change_type", F.lit("insert")
             )
         base = frames[0]
@@ -778,15 +743,13 @@ class GoldStore:
                     "rejected, store untouched"
                 )
 
-    def _check_row_constraints(self, name, df, cons) -> None:
-        """One-pass not_null/check audit for frames that do not go
-        through ``_stage_tables`` (merge sources)."""
+    @staticmethod
+    def _violations(df: DataFrame, exprs: list[str]) -> list[int]:
+        """Rows violating each SQL predicate, all counted in one job; a
+        predicate evaluating to NULL is a violation."""
         from pyspark.sql import functions as F
 
-        exprs = self._constraint_row_exprs(cons)
-        if not exprs:
-            return
-        viol = df.agg(
+        row = df.agg(
             *[
                 F.sum(
                     F.when(~F.expr(e), F.lit(1)).otherwise(F.lit(0))
@@ -795,10 +758,18 @@ class GoldStore:
                 for i, e in enumerate(exprs)
             ]
         ).collect()[0]
-        for i, e in enumerate(exprs):
-            if int(viol[f"v{i}"] or 0):
+        return [int(row[f"v{i}"] or 0) for i in range(len(exprs))]
+
+    def _check_row_constraints(self, name, df, cons) -> None:
+        """One-pass not_null/check audit for frames that do not go
+        through ``_stage_tables`` (merge sources)."""
+        exprs = self._constraint_row_exprs(cons)
+        if not exprs:
+            return
+        for e, n_bad in zip(exprs, self._violations(df, exprs)):
+            if n_bad:
                 raise ConstraintError(
-                    f"table {name!r}: {int(viol[f'v{i}'])} source row(s) "
+                    f"table {name!r}: {n_bad} source row(s) "
                     f"violate declared constraint {e!r} — merge rejected, "
                     "store untouched"
                 )
@@ -900,166 +871,83 @@ class GoldStore:
                 )
 
     @staticmethod
-    def _rel_data_path(uri: str) -> str:
-        """Manifest-relative ``_data/<txn>/...`` path of a Spark-reported
-        file URI. Staged files live directly under ``<store>/_data/``, so
-        the suffix after the LAST ``/_data/`` is exactly the manifest's
-        relative path — immune to scheme prefixes, URL quoting, symlink
-        resolution, or a non-normalized store path."""
-        from urllib.parse import unquote, urlparse
-
-        p = (
-            unquote(urlparse(uri).path)
-            if "://" in uri or uri.startswith("file:")
-            else uri
-        )
-        head, sep, tail = p.rpartition(os.sep + "_data" + os.sep)
-        return os.path.join("_data", tail) if sep else p
-
-    @classmethod
-    def _complete_files(cls, entry: dict) -> list[dict] | None:
-        """The entry's per-file records iff they cover EVERY referenced
-        dir; None otherwise ("no usable stats — read/rewrite whole dirs").
-        A legacy dir-level entry (files None) later extended by
-        ``publish_append`` carries a PARTIAL list — treating it as
-        complete would make file-list readers silently drop the legacy
-        dir's rows and ``merge`` silently lose them (ADVICE r8)."""
-        files = entry.get("files")
-        if files is None:
-            return None
-        if entry.get("file_level"):
-            # merge-produced entries are born with full coverage and the
-            # dirs list is derived FROM the file set — nothing to check
-            return files
-        covered = {os.sep.join(f["path"].split(os.sep)[:3]) for f in files}
-        if any(d not in covered for d in cls._dirs(entry)):
-            return None
-        return files
-
-    @staticmethod
-    def _partition_matches(f: dict, col: str, lo, hi) -> bool | None:
-        """True/False if the file's manifest-recorded partition value for
-        ``col`` decides the predicate; None if ``col`` is not a partition
-        column of this file. Partition values are path strings; coerce
-        to the predicate's numeric type when the bounds are numeric,
-        keeping the file (conservative) if coercion fails."""
+    def _file_matches(f: dict, bounds: dict) -> bool:
+        """False iff the file record's manifest metadata proves no row
+        of it satisfies every ``col: (lo, hi)`` bound. Per column the
+        recorded partition value decides first — a path string, coerced
+        to the bound's numeric type — then the column's [min, max]
+        stats. A ``None`` bound is no constraint; a column without
+        metadata, or a partition value that does not coerce, keeps the
+        file (conservative)."""
         part = f.get("partition") or {}
-        if col not in part:
-            return None
-        v = part[col]
-        if isinstance(lo, bool) or isinstance(hi, bool):
-            return True
-        if isinstance(lo, (int, float)):
-            try:
-                v = float(v) if isinstance(lo, float) else int(v)
-            except (TypeError, ValueError):
-                return True
-        return bool(lo <= v <= hi)
-
-    def pruned_files(self, name: str, col: str, lo, hi) -> list[str] | None:
-        """Data files of ``name`` whose manifest metadata for ``col``
-        intersects [lo, hi] — Iceberg-style pruning: the planner touches
-        ONLY the manifest, never a parquet footer. Prunes on BOTH the
-        file's recorded partition values (``date_sk=X`` path layout,
-        recorded at stage time) and its column [min, max] stats. Returns
-        None when the manifest carries no stats (legacy entry), meaning
-        "cannot prune, read everything". Files without metadata for
-        ``col`` are kept (conservative)."""
-        entry = self.current_manifest()["tables"][name]
-        files = self._complete_files(entry)
-        if files is None:
-            return None
-        keep = []
-        for f in files:
-            pm = self._partition_matches(f, col, lo, hi)
-            if pm is False:
-                continue
-            if pm is True:
-                keep.append(f)
-                continue
-            rng = f.get("stats", {}).get(col)
-            if rng is None or (rng[1] >= lo and rng[0] <= hi):
-                keep.append(f)
-        return keep
-
-    def pruned_files_multi(self, name: str, bounds: dict) -> list[str] | None:
-        """Conjunctive pruning: files whose metadata intersects EVERY
-        ``col: (lo, hi)`` predicate — the read shape that pays off a
-        Z-ordered layout (each additional indexed column multiplies the
-        cut). Same conservative semantics as ``pruned_files`` per
-        column; returns None when the manifest carries no stats."""
-        entry = self.current_manifest()["tables"][name]
-        files = self._complete_files(entry)
-        if files is None:
-            return None
-        keep = []
-        for f in files:
-            ok = True
-            for col, (lo, hi) in bounds.items():
-                pm = self._partition_matches(f, col, lo, hi)
-                if pm is False:
-                    ok = False
-                    break
-                if pm is True:
-                    continue
-                rng = f.get("stats", {}).get(col)
-                if rng is not None and not (rng[1] >= lo and rng[0] <= hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(f)
-        return keep
-
-    def read_pruned_multi(self, name: str, bounds: dict) -> DataFrame:
-        """``read(name)`` filtered to the conjunction of every
-        ``col: (lo, hi)`` bound, scanning only the multi-predicate
-        manifest-pruned file set (residual filters still apply — stats
-        prune files, not rows)."""
-        from pyspark.sql import functions as F
-
-        files = self.pruned_files_multi(name, bounds)
-        if files is None:
-            base = self.read(name)
-        elif not files:
-            base = self.spark.createDataFrame([], self.read(name).schema)
-        else:
-            base = self._read_files(files)
-        cond = F.lit(True)
+        stats = f.get("stats") or {}
         for col, (lo, hi) in bounds.items():
-            cond = cond & (F.col(col) >= lo) & (F.col(col) <= hi)
-        return base.filter(cond)
+            if col in part:
+                v, probe = part[col], lo if lo is not None else hi
+                if probe is None or isinstance(probe, bool):
+                    continue
+                if isinstance(probe, (int, float)):
+                    try:
+                        v = float(v) if isinstance(probe, float) else int(v)
+                    except (TypeError, ValueError):
+                        continue
+                fmin = fmax = v
+            elif col in stats:
+                fmin, fmax = stats[col]
+            else:
+                continue
+            if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
+                return False
+        return True
 
-    def read_pruned(self, name: str, col: str, lo, hi) -> DataFrame:
-        """``read(name).filter(lo <= col <= hi)`` but scanning only the
-        manifest-pruned file set. Combine with a Z-ordered layout
-        (operators/layout.py) and the pruned set shrinks on EVERY
-        indexed column; the residual filter still applies (stats prune
-        files, not rows).
+    def pruned_files(self, name: str, bounds: dict) -> list[dict]:
+        """File records of ``name`` whose manifest metadata intersects
+        EVERY ``col: (lo, hi)`` bound — Iceberg-style pruning: the
+        planner touches ONLY the manifest, never a parquet footer. Prunes
+        on both the file's recorded partition values (``date_sk=X`` path
+        layout, recorded at stage time) and its column [min, max] stats;
+        each additional bounded column of a Z-ordered layout multiplies
+        the cut."""
+        entry = self.current_manifest()["tables"][name]
+        return [f for f in self._files(name, entry) if self._file_matches(f, bounds)]
+
+    def read_pruned(self, name: str, bounds: dict) -> DataFrame:
+        """``read(name)`` filtered to every ``col: (lo, hi)`` bound
+        (``None`` = unbounded), scanning only the manifest-pruned file
+        set. Combine with a Z-ordered layout (operators/layout.py) and
+        the pruned set shrinks on EVERY indexed column; the residual
+        filter still applies (stats prune files, not rows).
 
         Partition-aware: files under a ``col=value`` layout read with
         ``basePath`` pinned to their staged table root, so Spark
         reconstructs the partition column for exactly the file list we
         pass — no silent column loss, no full-table fallback. File
-        groups from different append txn dirs union by name (the
-        manifest schema already guarantees type compatibility)."""
+        groups from different append txn dirs union by name onto the
+        manifest schema."""
         from pyspark.sql import functions as F
 
-        files = self.pruned_files(name, col, lo, hi)
-        if files is None:
-            base = self.read(name)
-        elif not files:
-            base = self.spark.createDataFrame([], self.read(name).schema)
+        entry = self.current_manifest()["tables"][name]
+        files = [f for f in self._files(name, entry) if self._file_matches(f, bounds)]
+        if files:
+            base = self._apply_entry_schema(self._read_files(files), entry["schema"])
         else:
-            base = self._read_files(files)
-        return base.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+            base = self._read_entry(name, entry).limit(0)
+        cond = F.lit(True)
+        for col, (lo, hi) in bounds.items():
+            if lo is not None:
+                cond = cond & (F.col(col) >= lo)
+            if hi is not None:
+                cond = cond & (F.col(col) <= hi)
+        return base.filter(cond)
 
     @staticmethod
     def _file_stats(target: str, base: str) -> list[dict]:
-        """Per-file (min, max) of every JSON-portable primitive column,
-        from parquet footers at stage time. One footer read per staged
-        file — metadata-only, proportional to file count not bytes (the
-        same cost Iceberg pays to build its manifests); readers then
-        prune without opening any footer."""
+        """Per-file row count and (min, max) of every JSON-portable
+        top-level primitive column, from parquet footers at stage time.
+        One footer read per staged file — metadata-only, proportional to
+        file count not bytes (the same cost Iceberg pays to build its
+        manifests); readers then prune without opening any footer. A
+        file whose footer cannot be read (torn write) raises here."""
         import glob as _glob
 
         import pyarrow.parquet as pq
@@ -1068,22 +956,27 @@ class GoldStore:
         root = target.rstrip(os.sep)
         for fp in sorted(_glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)):
             md = pq.ParquetFile(fp).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
             stats: dict[str, list] = {}
-            for ci, cname in enumerate(names):
+            for ci in range(md.num_columns):
+                col = md.schema.column(ci)
+                if col.path != col.name:
+                    continue  # a nested leaf: its name may shadow a column
                 mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        mins = []
-                        break
-                    mins.append(st.min)
-                    maxs.append(st.max)
+                try:
+                    for rg in range(md.num_row_groups):
+                        st = md.row_group(rg).column(ci).statistics
+                        if st is None or not st.has_min_max:
+                            mins = []
+                            break
+                        mins.append(st.min)
+                        maxs.append(st.max)
+                except NotImplementedError:
+                    continue  # pyarrow cannot extract this type's stats (DECIMAL)
                 if mins and all(isinstance(v, (int, float, str, bool)) for v in (min(mins), max(maxs))):
-                    stats[cname] = [min(mins), max(maxs)]
-            # per-file row count (free from the footer): lets merge()
-            # maintain the entry row total from metadata alone when it
-            # carries untouched files forward
+                    stats[col.name] = [min(mins), max(maxs)]
+            # per-file row count (free from the footer): the staged
+            # entry's row total, and what lets merge() maintain it from
+            # metadata alone when it carries untouched files forward
             entry = {"path": os.path.relpath(fp, base), "rows": md.num_rows, "stats": stats}
             # a col=value partition layout encodes columns in directory
             # names — record them per file so the planner can prune
@@ -1097,6 +990,29 @@ class GoldStore:
                 entry["partition"] = part
             out.append(entry)
         return out
+
+    @staticmethod
+    def _read_back_schema(df: DataFrame, partition_cols: list[str]) -> dict:
+        """``df``'s schema as Spark reads its parquet back: every field
+        (nested ones too) nullable, partition columns last and without
+        metadata — known from the plan, so no read-back is needed."""
+        from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+        def nullable(t):
+            if isinstance(t, StructType):
+                return StructType(
+                    [StructField(f.name, nullable(f.dataType), True, f.metadata) for f in t.fields]
+                )
+            if isinstance(t, ArrayType):
+                return ArrayType(nullable(t.elementType), True)
+            if isinstance(t, MapType):
+                return MapType(nullable(t.keyType), nullable(t.valueType), True)
+            return t
+
+        fields = nullable(df.schema).fields
+        data = [f for f in fields if f.name not in partition_cols]
+        parts = [StructField(f.name, f.dataType, True) for f in fields if f.name in partition_cols]
+        return StructType(data + parts).jsonValue()
 
     # -- write + audit + publish ------------------------------------------
 
@@ -1114,53 +1030,46 @@ class GoldStore:
         (success: the manifest now references the dir; rejection: the
         dir is a plain orphan, reclaimable after the retention age).
 
-        ``expectations`` maps table name → SQL predicates every row must
-        satisfy (the Delta-constraints shape, public design): violations
-        are counted on the AUDIT read-back — what actually landed, not
-        the logical plan — and any violation raises ``ExpectationError``
+        The audit opens every staged footer (``_file_stats``): a torn
+        file fails there, and the footer row counts are the entry's
+        ``rows`` — no Spark job. ``expectations`` maps table name → SQL
+        predicates every row must satisfy (the Delta-constraints shape,
+        public design): violations are counted on a read of what
+        actually landed, not the logical plan — the only read-back the
+        audit makes — and any violation raises ``ExpectationError``
         before a manifest exists, so a bad batch can never become
         visible."""
-        from pyspark.sql import functions as F
-
         self._mark_staged(txn)
         staged: dict[str, dict] = {}
         for name, df in tables.items():
             rel = os.path.join("_data", txn, name)
             target = os.path.join(self.path, rel)
+            parts = (
+                ["date_sk"]
+                if partitioned and name in PARTITIONED_FACTS and "date_sk" in df.columns
+                else []
+            )
             w = df.write.mode("error")
-            if partitioned and name in PARTITIONED_FACTS and "date_sk" in df.columns:
-                w = w.partitionBy("date_sk")
+            if parts:
+                w = w.partitionBy(*parts)
             w.parquet(target)
-            # audit: reread what actually landed — a table that cannot be
-            # scanned (torn file, schema corruption) must never publish
-            back = self.spark.read.parquet(target)
+            files = self._file_stats(target, self.path)
+            entry = staged[name] = {
+                "dir": rel,
+                "rows": sum(f["rows"] for f in files),
+                "files": files,
+                "schema": self._read_back_schema(df, parts),
+            }
             exprs = (expectations or {}).get(name) or []
             if exprs:
-                # one job for all predicates: count rows violating each
-                viol = back.agg(
-                    *[
-                        F.sum(
-                            F.when(~F.expr(e), F.lit(1)).otherwise(F.lit(0))
-                            # a predicate evaluating to NULL is a violation
-                            + F.when(F.expr(e).isNull(), F.lit(1)).otherwise(F.lit(0))
-                        ).alias(f"v{i}")
-                        for i, e in enumerate(exprs)
-                    ]
-                ).collect()[0]
-                for i, e in enumerate(exprs):
-                    n_bad = int(viol[f"v{i}"] or 0)
+                back = self._read_entry(name, entry)
+                for e, n_bad in zip(exprs, self._violations(back, exprs)):
                     if n_bad:
                         raise ExpectationError(
                             f"table {name!r}: {n_bad} row(s) violate "
                             f"expectation {e!r} — publish rejected, store "
                             "untouched"
                         )
-            staged[name] = {
-                "dir": rel,
-                "rows": back.count(),
-                "files": self._file_stats(target, self.path),
-                "schema": back.schema.jsonValue(),
-            }
         return staged
 
     def _mark_staged(self, txn: str) -> None:
@@ -1214,13 +1123,11 @@ class GoldStore:
             pass
 
     @staticmethod
-    def _merge_schemas(name: str, prior: dict | None, delta: dict) -> dict:
+    def _merge_schemas(name: str, prior: dict, delta: dict) -> dict:
         """Union of the prior entry schema and an append delta's schema,
         enforcing the evolution contract: additive columns fine, type
         changes rejected (``SchemaEvolutionError``) BEFORE any manifest
         is written."""
-        if prior is None:
-            return delta
         prior_types = {f["name"]: f["type"] for f in prior["fields"]}
         merged = [dict(f) for f in prior["fields"]]
         for f in delta["fields"]:
@@ -1253,6 +1160,20 @@ class GoldStore:
                 )
         return {**prior, **new}
 
+    def _carry(
+        self, name: str, prior: dict | None, entry: dict, properties: dict | None = None
+    ) -> dict:
+        """``entry`` with the prior entry's table metadata carried in:
+        its properties (merged with ``properties``, existing keys
+        immutable) and its declared constraints."""
+        prior = prior or {}
+        props = self._merge_properties(name, prior.get("properties"), properties)
+        if props is not None:
+            entry["properties"] = props
+        if prior.get("constraints"):
+            entry["constraints"] = prior["constraints"]
+        return entry
+
     def _fold_constraint_expectations(
         self, cons_map: dict[str, dict], expectations
     ) -> dict[str, list[str]] | None:
@@ -1278,9 +1199,7 @@ class GoldStore:
         current = self.current_manifest()["tables"]
 
         def staged_df(n):
-            return self.spark.read.parquet(
-                os.path.join(self.path, staged[n]["dir"])
-            )
+            return self._read_entry(n, staged[n])
 
         def resolver(t):
             if t in staged:
@@ -1342,11 +1261,8 @@ class GoldStore:
                     for c, _ in self._referencing_fks(t)
                 ):
                     continue
-                post = self.spark.read.parquet(
-                    os.path.join(self.path, staged[t]["dir"])
-                )
                 self._audit_referencing_children(
-                    t, post, skip_children=staged_names
+                    t, self._read_entry(t, staged[t]), skip_children=staged_names
                 )
         except ConstraintError:
             self._unmark_staged(txn)
@@ -1354,14 +1270,12 @@ class GoldStore:
 
         def replace_tables(tables: dict) -> None:
             for name, entry in staged.items():
-                prior = tables.get(name) or {}
-                props = self._merge_properties(
-                    name, prior.get("properties"), (properties or {}).get(name)
+                tables[name] = self._carry(
+                    name,
+                    tables.get(name),
+                    {**entry, **(entry_extra or {}).get(name, {})},
+                    (properties or {}).get(name),
                 )
-                merged = {**entry, **(entry_extra or {}).get(name, {})}
-                if prior.get("constraints"):
-                    merged["constraints"] = prior["constraints"]
-                tables[name] = merged if props is None else {**merged, "properties": props}
 
         try:
             return self._commit(replace_tables, base_version, txn, lock_timeout)
@@ -1400,11 +1314,6 @@ class GoldStore:
         def append_tables(tables: dict) -> None:
             for name, delta in staged.items():
                 prior = tables.get(name)
-                props = self._merge_properties(
-                    name,
-                    (prior or {}).get("properties"),
-                    (properties or {}).get(name),
-                )
                 if prior is None:
                     entry = {
                         "dirs": [delta["dir"]],
@@ -1415,10 +1324,10 @@ class GoldStore:
                 else:
                     entry = {
                         "dirs": self._dirs(prior) + [delta["dir"]],
-                        "rows": int(prior.get("rows", 0)) + delta["rows"],
-                        "files": (prior.get("files") or []) + delta["files"],
+                        "rows": int(prior["rows"]) + delta["rows"],
+                        "files": self._files(name, prior) + delta["files"],
                         "schema": self._merge_schemas(
-                            name, prior.get("schema"), delta["schema"]
+                            name, prior["schema"], delta["schema"]
                         ),
                     }
                     # appending to a merge-produced entry: the prior dirs
@@ -1426,11 +1335,9 @@ class GoldStore:
                     # stay file-level or reads would resurrect dead files
                     if prior.get("file_level"):
                         entry["file_level"] = True
-                if props is not None:
-                    entry["properties"] = props
-                if prior is not None and prior.get("constraints"):
-                    entry["constraints"] = prior["constraints"]
-                tables[name] = entry
+                tables[name] = self._carry(
+                    name, prior, entry, (properties or {}).get(name)
+                )
 
         try:
             return self._commit(append_tables, base_version, txn, lock_timeout)
@@ -1521,6 +1428,7 @@ class GoldStore:
         entry = self.current_manifest()["tables"].get(name)
         if entry is None:
             raise KeyError(name)
+        files = self._files(name, entry)
         cons = dict(entry.get("constraints") or {})
         if mode == "delete" and self._referencing_fks(name):
             # parent-side audit (ADVICE r9): deleting rows from a table
@@ -1605,113 +1513,72 @@ class GoldStore:
                     f"merge source has duplicate keys on {key_cols} — "
                     "latest-wins needs an explicit pre-aggregation"
                 )
-        files = self._complete_files(entry)
-        if files is None:
-            # legacy or partially-covered entry without usable file
-            # stats: no pruning possible —
-            # correct full copy-on-write rewrite of the whole table
-            # (insert_if_absent still appends, but freshness must check
-            # the whole table)
-            if mode == "insert_if_absent":
-                existing = self._read_entry(entry).select(*key_cols)
+        # metadata-only candidate pruning: source key bounds vs the
+        # per-file [min,max]/partition metadata, one bounded agg job
+        bounds_row = source.agg(
+            *[F.min(c).alias(f"lo_{i}") for i, c in enumerate(key_cols)],
+            *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(key_cols)],
+        ).collect()[0]
+        bounds = {
+            c: (bounds_row[f"lo_{i}"], bounds_row[f"hi_{i}"])
+            for i, c in enumerate(key_cols)
+        }
+        cand = [f for f in files if self._file_matches(f, bounds)]
+        if mode == "insert_if_absent":
+            # a key present anywhere in the target MUST live in a
+            # candidate file (pruning is conservative), so the
+            # anti-join against candidates alone decides freshness
+            # (DV-aware read: a deleted key is absent, so re-insert)
+            if cand:
+                existing = self._read_files(cand).select(*key_cols)
                 fresh = source.join(
                     existing.dropDuplicates(key_cols), key_cols, "left_anti"
-                ).cache()
-                try:
-                    if fresh.count() == 0:
-                        return base_version
-                    return self.publish_append({name: fresh}, base_version, lock_timeout)
-                finally:
-                    fresh.unpersist(blocking=True)
-            touched_rel = None
-            untouched: list[dict] = []
-            target = self._read_entry(entry)
-        else:
-            # metadata-only candidate pruning: source key bounds vs the
-            # per-file [min,max]/partition metadata, one bounded agg job
-            bounds_row = source.agg(
-                *[F.min(c).alias(f"lo_{i}") for i, c in enumerate(key_cols)],
-                *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(key_cols)],
-            ).collect()[0]
-            cand = []
-            for f in files:
-                keep = True
-                for i, c in enumerate(key_cols):
-                    lo, hi = bounds_row[f"lo_{i}"], bounds_row[f"hi_{i}"]
-                    if lo is None or hi is None:
-                        continue
-                    pm = self._partition_matches(f, c, lo, hi)
-                    if pm is False:
-                        keep = False
-                        break
-                    if pm is True:
-                        continue
-                    rng = f.get("stats", {}).get(c)
-                    if rng is not None and not (rng[1] >= lo and rng[0] <= hi):
-                        keep = False
-                        break
-                if keep:
-                    cand.append(f)
-            if mode == "insert_if_absent":
-                # a key present anywhere in the target MUST live in a
-                # candidate file (pruning is conservative), so the
-                # anti-join against candidates alone decides freshness
-                # (DV-aware read: a deleted key is absent, so re-insert)
-                if cand:
-                    existing = self._read_files(cand).select(*key_cols)
-                    fresh = source.join(
-                        existing.dropDuplicates(key_cols), key_cols, "left_anti"
-                    )
-                else:
-                    fresh = source
-                fresh = fresh.cache()
-                try:
-                    if fresh.count() == 0:
-                        return base_version  # pure replay — no new version
-                    return self.publish_append({name: fresh}, base_version, lock_timeout)
-                finally:
-                    fresh.unpersist(blocking=True)
-            # exact touched set: which candidate files actually hold a
-            # LIVE source-key row (bounded collect — file names, not
-            # rows). The manifest-relative row identity from _metadata
-            # replaces input_file_name(): immune to symlink/scheme path
-            # spelling (ADVICE r8) and DV-aware (a file whose only match
-            # is an already-deleted row is NOT touched).
-            touched_rel = []
-            if cand:
-                keys = source.select(*key_cols).dropDuplicates(key_cols)
-                hit = (
-                    self._read_files(cand, row_identity=True)
-                    .join(keys, key_cols, "left_semi")
-                    .select(self.REL_COL)
-                    .distinct()
-                    .collect()
                 )
-                rel_hits = {r[self.REL_COL] for r in hit}
-                touched_rel = [f["path"] for f in cand if f["path"] in rel_hits]
-            if mode == "delete" and not touched_rel:
-                return base_version  # nothing to delete — no-op, no new version
-            untouched = [f for f in files if f["path"] not in set(touched_rel)]
-            touched_recs = [f for f in files if f["path"] in set(touched_rel)]
-            if strategy == "mor":
-                return self._merge_mor(
-                    name, source, key_cols, mode, base_version, lock_timeout,
-                    files, touched_recs,
-                )
-            target = self._read_files(touched_recs) if touched_recs else None
-
+            else:
+                fresh = source
+            fresh = fresh.cache()
+            try:
+                if fresh.count() == 0:
+                    return base_version  # pure replay — no new version
+                return self.publish_append({name: fresh}, base_version, lock_timeout)
+            finally:
+                fresh.unpersist(blocking=True)
+        # exact touched set: which candidate files actually hold a
+        # LIVE source-key row (bounded collect — file names, not
+        # rows). The manifest-relative row identity from _metadata
+        # replaces input_file_name(): immune to symlink/scheme path
+        # spelling (ADVICE r8) and DV-aware (a file whose only match
+        # is an already-deleted row is NOT touched).
         matched_keys = source.select(*key_cols).dropDuplicates(key_cols)
-        if target is not None:
-            kept = target.join(matched_keys, key_cols, "left_anti")
-        else:
-            kept = None
+        touched_rel: set[str] = set()
+        if cand:
+            hit = (
+                self._read_files(cand, row_identity=True)
+                .join(matched_keys, key_cols, "left_semi")
+                .select(self.REL_COL)
+                .distinct()
+                .collect()
+            )
+            touched_rel = {r[self.REL_COL] for r in hit}
+        if mode == "delete" and not touched_rel:
+            return base_version  # nothing to delete — no-op, no new version
+        untouched = [f for f in files if f["path"] not in touched_rel]
+        touched_recs = [f for f in files if f["path"] in touched_rel]
+        if strategy == "mor":
+            return self._merge_mor(
+                name, source, key_cols, mode, base_version, lock_timeout,
+                files, touched_recs,
+            )
+        kept = (
+            self._read_files(touched_recs).join(matched_keys, key_cols, "left_anti")
+            if touched_recs
+            else None
+        )
         if mode == "upsert":
             new_rows = source if kept is None else kept.unionByName(
                 source, allowMissingColumns=True
             )
         else:
-            if kept is None:
-                raise AssertionError("delete mode reached stage with no target")
             new_rows = kept
         txn = uuid.uuid4().hex[:12]
         staged = self._stage_tables({name: new_rows}, txn, partitioned=False)
@@ -1719,26 +1586,17 @@ class GoldStore:
         def merge_tables(tables: dict) -> None:
             prior = tables[name]
             delta = staged[name]
-            if untouched and not all("rows" in f for f in untouched):
-                carried = self._read_files(untouched).count()
-            else:
-                carried = sum(int(f["rows"]) for f in untouched) - sum(
-                    int(d["rows"]) for f in untouched for d in f.get("dv") or []
-                )
+            carried = sum(int(f["rows"]) for f in untouched) - sum(
+                int(d["rows"]) for f in untouched for d in f.get("dv") or []
+            )
             new_files = untouched + delta["files"]
-            new_entry = {
+            tables[name] = self._carry(name, prior, {
                 "file_level": True,
                 "dirs": self._file_level_dirs(new_files, extra=[delta["dir"]]),
                 "rows": carried + delta["rows"],
                 "files": new_files,
-                "schema": self._merge_schemas(name, prior.get("schema"), delta["schema"]),
-            }
-            props = prior.get("properties")
-            if props is not None:
-                new_entry["properties"] = props
-            if prior.get("constraints"):
-                new_entry["constraints"] = prior["constraints"]
-            tables[name] = new_entry
+                "schema": self._merge_schemas(name, prior["schema"], delta["schema"]),
+            })
 
         try:
             return self._commit(merge_tables, base_version, txn, lock_timeout)
@@ -1799,28 +1657,22 @@ class GoldStore:
                     new_files = new_files + delta["files"]
                 n_deleted = sum(dv_per_file.values())
                 schema = (
-                    self._merge_schemas(name, prior.get("schema"), delta["schema"])
+                    self._merge_schemas(name, prior["schema"], delta["schema"])
                     if delta is not None
-                    else prior.get("schema")
+                    else prior["schema"]
                 )
-                new_entry = {
+                tables[name] = self._carry(name, prior, {
                     "file_level": True,
                     "dirs": self._file_level_dirs(
                         new_files,
                         extra=[d for d in [dv_rel, delta and delta["dir"]] if d],
                     ),
-                    "rows": int(prior.get("rows", 0))
+                    "rows": int(prior["rows"])
                     - int(n_deleted)
                     + (delta["rows"] if delta is not None else 0),
                     "files": new_files,
                     "schema": schema,
-                }
-                props = prior.get("properties")
-                if props is not None:
-                    new_entry["properties"] = props
-                if prior.get("constraints"):
-                    new_entry["constraints"] = prior["constraints"]
-                tables[name] = new_entry
+                })
 
             return self._commit(merge_tables, base_version, txn, lock_timeout)
         finally:
@@ -1850,7 +1702,7 @@ class GoldStore:
             raise KeyError(name)
         if not entry.get("file_level"):
             return None
-        files = entry["files"]
+        files = self._files(name, entry)
         by_dir: dict[str, list[dict]] = {}
         for f in files:
             d = os.sep.join(f["path"].split(os.sep)[:3])
@@ -1902,23 +1754,17 @@ class GoldStore:
                 # is not a victim on the next pass — the fold converges)
                 delta_files = delta["files"][:1]
             new_files = untouched + delta_files
-            new_entry = {
+            tables[name] = self._carry(name, prior, {
                 "file_level": True,
                 "dirs": self._file_level_dirs(
                     new_files, extra=[delta["dir"]] if delta_files else None
                 ),
-                "rows": int(prior.get("rows", 0)),  # row-preserving rewrite
+                "rows": int(prior["rows"]),  # row-preserving rewrite
                 "files": new_files,
-                "schema": self._merge_schemas(name, prior.get("schema"), delta["schema"]),
+                "schema": self._merge_schemas(name, prior["schema"], delta["schema"]),
                 # changes_cdc skips this version: live rows unchanged
                 "rewrite_kind": "row_preserving",
-            }
-            props = prior.get("properties")
-            if props is not None:
-                new_entry["properties"] = props
-            if prior.get("constraints"):
-                new_entry["constraints"] = prior["constraints"]
-            tables[name] = new_entry
+            })
 
         try:
             return self._commit(fold_tables, base_version, txn, lock_timeout)

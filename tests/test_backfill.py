@@ -111,6 +111,38 @@ def test_progress_commits_atomically_with_gold(spark, tmp_path, bronze):
     assert "player_dim" in row["loaded"] and row["failed"] == []
 
 
+def test_bronze_caches_released_after_each_interval(spark, tmp_path, monkeypatch):
+    """Every interval's cached bronze frames are unpersisted once its
+    publish resolves — including the attempt a lost CAS race made
+    ``publish_with_retry`` rebuild — so a long-running driver does not
+    accumulate persistent RDDs."""
+    from rustcheatersdatapipeline_spark.warehouse.persist import ConcurrentWriteError
+
+    dirs = {}
+    for i in (1, 2):
+        d = tmp_path / f"bronze{i}"
+        d.mkdir()
+        write_fixtures(d)
+        dirs[START + i * STEP] = str(d)
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    real_publish = store.publish
+    calls = {"n": 0}
+
+    def lose_first_race(*a, **k):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise ConcurrentWriteError("another writer committed first")
+        return real_publish(*a, **k)
+
+    monkeypatch.setattr(store, "publish", lose_first_race)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    ran = run_interval_range(spark, store, dirs.__getitem__, START, START + 2 * STEP)
+    assert calls["n"] == 3  # interval 1 was built twice
+    assert [v for _, _, v in ran] == [1, 2]
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_racing_driver_skips_interval_committed_after_resume_check(
     spark, tmp_path, bronze, monkeypatch
 ):

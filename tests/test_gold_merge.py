@@ -202,7 +202,7 @@ def test_merge_on_partitioned_replace_published_table(spark, tmp_path):
     store.merge("fact", spark.createDataFrame([(2, 100, "Y")], "k bigint, date_sk int, v string"), ["k"])
     assert _rows(store, "fact") == {(1, 100, "x"), (2, 100, "Y"), (3, 200, "z")}
     # pruning on the untouched partition still works from the manifest
-    files = store.pruned_files("fact", "date_sk", 200, 200)
+    files = store.pruned_files("fact", {"date_sk": (200, 200)})
     assert files is not None and len(files) == 1
 
 
@@ -289,15 +289,15 @@ def test_multi_predicate_pruning_multiplies_the_cut(spark, tmp_path):
     for rows in quads.values():
         df = spark.createDataFrame(rows, "x bigint, y bigint, v string").coalesce(1)
         v = store.publish_append({"z": df}, base_version=v)
-    both = store.pruned_files_multi("z", {"x": (0, 5), "y": (0, 5)})
+    both = store.pruned_files("z", {"x": (0, 5), "y": (0, 5)})
     assert len(both) == 1
-    only_x = store.pruned_files("z", "x", 0, 5)
+    only_x = store.pruned_files("z", {"x": (0, 5)})
     assert len(only_x) == 2
-    got = {tuple(r) for r in store.read_pruned_multi(
+    got = {tuple(r) for r in store.read_pruned(
         "z", {"x": (0, 5), "y": (0, 5)}).collect()}
     assert got == {(1, 1, "a"), (2, 2, "b")}
     # residual filtering still applies inside the kept file
-    got = {tuple(r) for r in store.read_pruned_multi(
+    got = {tuple(r) for r in store.read_pruned(
         "z", {"x": (2, 5), "y": (0, 5)}).collect()}
     assert got == {(2, 2, "b")}
 
@@ -422,22 +422,21 @@ def _strip_file_stats(store, name):
 
 
 def test_merge_partial_file_stats_takes_full_rewrite_path(spark, tmp_path):
-    """A legacy (files=None) entry later extended by publish_append has
-    a PARTIAL file list. Treating it as complete would make merge drop
-    the legacy dir's rows (data loss) and pruned reads skip them; both
-    must fall back to whole-dir semantics instead."""
+    """No writer produces an entry without per-file records, so one is
+    rejected by name: appending to it (which would leave a PARTIAL file
+    list), pruned reads and merge all raise ``ValueError`` — nothing
+    treats a partial list as complete and drops the uncovered rows —
+    and the store stays untouched."""
     store, v = _store_with_batches(spark, tmp_path, BATCHES[:1])
     _strip_file_stats(store, "t")
-    store.publish_append({"t": _df(spark, BATCHES[1]).coalesce(1)}, v)
-    entry = store.current_manifest()["tables"]["t"]
-    # the emulated hazard is real: a partial list covering only batch 2
-    assert entry["files"] is not None and len(entry["files"]) == 1
-    assert store.pruned_files("t", "k", 1, 1) is None  # no silent skip
-    store.merge("t", _df(spark, [(2, "A2"), (99, "new")]), ["k"])
-    assert _rows(store, "t") == {
-        (1, "a1"), (2, "A2"), (3, "a3"), (10, "b1"), (11, "b2"), (99, "new")
-    }
-    assert store.current_manifest()["tables"]["t"]["rows"] == 6
+    with pytest.raises(ValueError, match="'t'.*files"):
+        store.publish_append({"t": _df(spark, BATCHES[1]).coalesce(1)}, v)
+    assert store.current_version() == v
+    with pytest.raises(ValueError, match="'t'.*files"):
+        store.pruned_files("t", {"k": (1, 1)})
+    with pytest.raises(ValueError, match="'t'.*files"):
+        store.merge("t", _df(spark, [(2, "A2"), (99, "new")]), ["k"])
+    assert store.current_version() == v
 
 
 def test_merge_upsert_sink_bootstrap_race_converges(spark, tmp_path):

@@ -216,3 +216,161 @@ def test_changes_since_refuses_pruned_history(spark, tmp_path):
     store.vacuum(min_age_seconds=0.0, keep_versions=1)  # prunes v2/v3 manifests
     with pytest.raises(ValueError, match="pruned"):
         store.changes_since("t", v1)
+
+
+def test_publish_empty_partitioned_fact_with_dim_commits(spark, tmp_path):
+    """An interval whose partitioned fact is empty still commits: the
+    footer audit needs no schema inference over a dir holding no
+    parquet file, and the table reads back empty with its columns."""
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    fact = spark.createDataFrame(
+        [], "player_sk bigint, game_sk bigint, banned int, date_sk int"
+    )
+    v = store.publish(
+        {"game_playing_banned_fact": fact, "player_dim": _df(spark, [("a", 1)])},
+        base_version=0,
+    )
+    assert v == 1
+    out = store.read("game_playing_banned_fact")
+    assert out.count() == 0
+    assert out.columns == fact.columns
+    assert _rows(store, "player_dim") == {("a", 1)}
+
+
+def _audit_cases(spark):
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        ArrayType, LongType, MapType, StringType, StructField, StructType,
+    )
+
+    fact = (
+        spark.range(40)
+        .withColumn("date_sk", (F.col("id") % 3 + 20220101).cast("int"))
+        .withColumn("v", F.col("id").cast("string"))
+    )
+    strict = StructType([
+        StructField("k", LongType(), False),
+        StructField("tags", ArrayType(StringType(), False), False),
+        StructField("attrs", MapType(StringType(), LongType(), False), False),
+        StructField("s", StructType([
+            StructField("a", LongType(), False),
+            StructField("b", ArrayType(LongType(), False), True),
+        ]), False),
+    ])
+    nested = spark.createDataFrame(
+        [(1, ["x"], {"p": 1}, (1, [2])), (2, [], {}, (3, None))], strict
+    )
+    empty = spark.createDataFrame([], "k bigint, v string")
+    return {"bans_fact": fact, "nested_dim": nested, "empty_dim": empty}
+
+
+@pytest.mark.parametrize("name", ["bans_fact", "nested_dim", "empty_dim"])
+def test_footer_audit_matches_spark_read_back(spark, tmp_path, name):
+    """The rows and schema the audit records from footers and the plan
+    are exactly what a Spark read of the staged dir reports."""
+    import os
+
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    store.publish({name: _audit_cases(spark)[name]}, base_version=0)
+    entry = store.current_manifest()["tables"][name]
+    back = spark.read.parquet(os.path.join(store.path, entry["dir"]))
+    assert entry["rows"] == back.count()
+    assert entry["schema"] == back.schema.jsonValue()
+
+
+def test_torn_staged_file_is_rejected(spark, tmp_path, monkeypatch):
+    """A staged parquet file cut short fails the footer audit: publish
+    raises and the store keeps its version and tables."""
+    import glob
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    v = store.publish({"player_dim": _df(spark, [("a", 1)])}, base_version=0)
+    real_parquet = DataFrameWriter.parquet
+
+    def torn_parquet(self, path, *a, **k):
+        real_parquet(self, path, *a, **k)
+        victim = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))[0]
+        with open(victim, "r+b") as f:
+            f.truncate(os.path.getsize(victim) // 2)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", torn_parquet)
+    with pytest.raises(ValueError):
+        store.publish(
+            {"player_dim": _df(spark, [("b", 2)]), "other_dim": _df(spark, [("z", 9)])},
+            base_version=v,
+        )
+    monkeypatch.undo()
+    assert store.current_version() == v
+    assert set(store.current_manifest()["tables"]) == {"player_dim"}
+    assert _rows(store, "player_dim") == {("a", 1)}
+
+
+def test_decimal_column_publishes_merges_and_prunes(spark, tmp_path):
+    """pyarrow cannot extract DECIMAL statistics: the column gets no
+    stats (pruning keeps its files) instead of failing the write."""
+    from decimal import Decimal
+
+    schema = "k bigint, price decimal(10,2)"
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    store.publish(
+        {"t": spark.createDataFrame(
+            [(1, Decimal("1.50")), (2, Decimal("2.25")), (3, Decimal("9.99"))], schema
+        )},
+        base_version=0,
+    )
+    files = store.current_manifest()["tables"]["t"]["files"]
+    assert not any("price" in f["stats"] for f in files)
+    assert any("k" in f["stats"] for f in files)
+    store.merge(
+        "t",
+        spark.createDataFrame([(2, Decimal("3.00")), (4, Decimal("4.00"))], schema),
+        ["k"],
+    )
+    assert _rows(store, "t") == {
+        (1, Decimal("1.50")), (2, Decimal("3.00")), (3, Decimal("9.99")), (4, Decimal("4.00"))
+    }
+    got = {tuple(r) for r in store.read_pruned("t", {"k": (2, 3)}).collect()}
+    assert got == {(2, Decimal("3.00")), (3, Decimal("9.99"))}
+    got = {
+        tuple(r)
+        for r in store.read_pruned("t", {"price": (Decimal("2"), None)}).collect()
+    }
+    assert got == {(2, Decimal("3.00")), (3, Decimal("9.99")), (4, Decimal("4.00"))}
+
+
+def test_nested_leaf_stats_do_not_shadow_top_level_column(spark, tmp_path):
+    """A struct field named like a top-level column must not record its
+    range under that column's name — merge would prune the file holding
+    the key and insert a duplicate instead of replacing the row."""
+    schema = "k bigint, s struct<k: bigint>"
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    store.publish({"t": spark.createDataFrame([(1, (100,))], schema).coalesce(1)}, base_version=0)
+    (f,) = store.current_manifest()["tables"]["t"]["files"]
+    assert f["stats"]["k"] == [1, 1]
+    store.merge("t", spark.createDataFrame([(1, (5,))], schema), ["k"])
+    assert [(r["k"], r["s"]["k"]) for r in store.read("t").collect()] == [(1, 5)]
+
+
+def test_staging_without_expectations_adds_no_spark_job(spark, tmp_path):
+    """The footer audit is metadata-only: staging a table without
+    expectations runs exactly the jobs of writing it."""
+    sc = spark.sparkContext
+    df = _df(spark, [("a", 1), ("b", 2)])
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("plain-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    staged = jobs(
+        "stage", lambda: store._stage_tables({"t": df}, "txn0", partitioned=False)
+    )
+    assert staged == plain > 0

@@ -30,30 +30,30 @@ def test_full_batch_end_to_end(spark, tmp_path):
 
 @pytest.mark.slow
 def test_transactional_batches_through_gold_store(spark, tmp_path):
-    """Full intervals publishing through GoldStore: batch 2 reads batch
-    1's committed state from the manifest (cross-batch upsert
-    accumulation), replays are no-ops, versions advance, and the final
-    tables equal the plain existing= chaining."""
-    from rustcheatersdatapipeline_spark.pipeline import run_batch_transactional
+    """Full intervals publishing through GoldStore: interval 2 reads
+    interval 1's committed state from the manifest (cross-batch upsert
+    accumulation), versions advance, and the final tables equal the
+    plain existing= chaining."""
+    from rustcheatersdatapipeline_spark.backfill import run_interval_range
     from rustcheatersdatapipeline_spark.warehouse.persist import GoldStore
 
     (tmp_path / "bronze").mkdir()
     write_fixtures(tmp_path / "bronze")
     store = GoldStore(spark, str(tmp_path / "gold"))
+    step = datetime.timedelta(hours=1)
+    second = INTERVAL_END + step
 
-    res1, v1 = run_batch_transactional(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, store
+    ran = run_interval_range(
+        spark, store, lambda _: str(tmp_path / "bronze"),
+        INTERVAL_END - step, second, step,
     )
-    assert res1.succeeded and v1 == 1
-    assert store.read("player_dim").count() == 2
+    assert [(ie, v) for ie, _, v in ran] == [(INTERVAL_END, 1), (second, 2)]
+    res1, res2 = ran[0][1], ran[1][1]
+    assert res1.succeeded and res2.succeeded
+    assert store.read_at("player_dim", 1).count() == 2
 
-    # identical second interval: key-idempotent upserts → same tables
-    res2, v2 = run_batch_transactional(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, store
-    )
-    assert res2.succeeded and v2 == 2
     plain = run_batch(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, existing=res1.gold
+        spark, str(tmp_path / "bronze"), second, existing=res1.gold
     )
     for name in plain.gold:
         cols = sorted(plain.gold[name].columns)  # partitionBy reorders cols
